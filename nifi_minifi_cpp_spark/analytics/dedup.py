@@ -44,76 +44,6 @@ def _winnow_window_mins(a, w: int):
     return mins[np.sort(first)]
 
 
-# --- vectorized XXH64 (optimization r17, guide §4.2) ---------------------
-# Bit-exact reimplementation of Spark's ``xxhash64`` (XXH64, seed 42;
-# Collet's reference algorithm — public spec) as numpy uint64 lane
-# arithmetic, so the per-position k-gram hashing that dominated
-# ``containment_dedup``'s scan stage (one JVM substring allocation +
-# one scalar hash per char position) becomes one vectorized pass.
-# Pinned bit-for-bit against the Spark expression in
-# tests/test_vectorized_kernels.py on an adversarial corpus (ASCII,
-# multibyte, astral plane, window-straddling chars, k < 8 / 8..31 /
-# >= 32 byte message lengths — every branch of the algorithm).
-_XXP1 = 0x9E3779B185EBCA87
-_XXP2 = 0xC2B2AE3D27D4EB4F
-_XXP3 = 0x165667B19E3779F9
-_XXP4 = 0x85EBCA77C2B2AE63
-_XXP5 = 0x27D4EB2F165667C5
-_XX_SEED = 42
-
-
-def _xxh64_rows(mat, length: int):
-    """XXH64 (seed 42) of each row of ``mat`` — a C-contiguous (n, W)
-    uint8 matrix, W a multiple of 8, zero-padded past ``length`` (the
-    true message byte length, identical for every row). Returns int64
-    hashes bit-identical to Spark's ``xxhash64`` over the same bytes."""
-    import numpy as np
-
-    u = np.uint64
-    p1, p2, p3, p4, p5 = u(_XXP1), u(_XXP2), u(_XXP3), u(_XXP4), u(_XXP5)
-
-    def rotl(x, r):
-        return (x << u(r)) | (x >> u(64 - r))
-
-    n = mat.shape[0]
-    words = mat.view(u)  # little-endian lanes, as the spec reads them
-    dwords = mat.view(np.uint32)
-    off = 0
-    if length >= 32:
-        v1 = np.full(n, u((_XX_SEED + _XXP1 + _XXP2) % 2**64), dtype=u)
-        v2 = np.full(n, u((_XX_SEED + _XXP2) % 2**64), dtype=u)
-        v3 = np.full(n, u(_XX_SEED), dtype=u)
-        v4 = np.full(n, u((_XX_SEED - _XXP1) % 2**64), dtype=u)
-        for s in range(length // 32):
-            b = 4 * s
-            v1 = rotl(v1 + words[:, b] * p2, 31) * p1
-            v2 = rotl(v2 + words[:, b + 1] * p2, 31) * p1
-            v3 = rotl(v3 + words[:, b + 2] * p2, 31) * p1
-            v4 = rotl(v4 + words[:, b + 3] * p2, 31) * p1
-        h = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
-        for v in (v1, v2, v3, v4):
-            h = (h ^ (rotl(v * p2, 31) * p1)) * p1 + p4
-        off = (length // 32) * 32
-    else:
-        h = np.full(n, u((_XX_SEED + _XXP5) % 2**64), dtype=u)
-    h = h + u(length)
-    while off + 8 <= length:
-        h = rotl(h ^ (rotl(words[:, off // 8] * p2, 31) * p1), 27) * p1 + p4
-        off += 8
-    if off + 4 <= length:
-        h = rotl(h ^ (dwords[:, off // 4].astype(u) * p1), 23) * p2 + p3
-        off += 4
-    while off < length:
-        h = rotl(h ^ (mat[:, off].astype(u) * p5), 11) * p1
-        off += 1
-    h ^= h >> u(33)
-    h *= p2
-    h ^= h >> u(29)
-    h *= p3
-    h ^= h >> u(32)
-    return h.view(np.int64)
-
-
 def _kgram_xxh64(text: str, k: int):
     """int64 ``xxhash64`` (seed 42) of every char k-gram of ``text`` —
     the vectorized twin of the former Catalyst
@@ -123,6 +53,8 @@ def _kgram_xxh64(text: str, k: int):
     Requires len(text) >= k. Multibyte texts group windows by byte
     length so every group still hashes as one fixed-width matrix."""
     import numpy as np
+
+    from .vhash import xxh64_rows
 
     b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
     nchars = len(text)
@@ -135,7 +67,7 @@ def _kgram_xxh64(text: str, k: int):
             pad[np.arange(n)[:, None] + np.arange(width)[None, :]]
         )
         mat[:, k:] = 0
-        return _xxh64_rows(mat, k)
+        return xxh64_rows(mat, k)
     cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
     clen = 1 + (cp >= 0x80).astype(np.int64) + (cp >= 0x800) + (cp >= 0x10000)
     offs = np.concatenate(([0], np.cumsum(clen)))
@@ -150,7 +82,7 @@ def _kgram_xxh64(text: str, k: int):
         width = (int(L) + 7) & ~7
         mat = np.ascontiguousarray(pad[st[:, None] + np.arange(width)[None, :]])
         mat[:, int(L) :] = 0
-        out[sel] = _xxh64_rows(mat, int(L))
+        out[sel] = xxh64_rows(mat, int(L))
     return out
 
 
@@ -246,15 +178,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     window position — O(len²). Hot paths must project ``words(col)``
     into a column first and call :func:`word_shingles_of` on it."""
     return word_shingles_of(words(col), n)
-
-
-def char_shingles(col: Column, n: int = 5) -> Column:
-    k = F.length(col) - (n - 1)
-    sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.substring(col, i + 1, n),
-    )
-    return F.array_distinct(F.when(k > 0, sh).otherwise(F.array(col)))
 
 
 # ---------------------------------------------------------------------------

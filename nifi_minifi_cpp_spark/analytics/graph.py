@@ -1,56 +1,70 @@
-"""Distributed connected components — transitive closure for dedup.
+"""Iterative graph operators as DataFrame joins.
 
-The pairwise dedup family (MinHash/SimHash/embedding/semantic) drops
-near-duplicates against a kept exemplar; when duplicate relations
-CHAIN (A~B, B~C, but A!~C), cluster-consistent dedup needs the
-CONNECTED COMPONENT of the similarity graph, not pairwise verdicts.
-This is the classic iterative-algorithm gap SQL can't express.
+Connected components (cluster-consistent dedup), the PageRank family
+(data selection), label propagation, triangle census, HITS, BFS hops
+and k-core peeling. SQL cannot express their fixpoint loops, so each
+round is a slim join of a node-sized frame onto the edge list plus an
+aggregate, and ``reliable_barrier`` cuts the lineage between rounds.
 
-``connected_components`` implements min-label propagation with
-POINTER JUMPING (the hash-to-min idea of Rastogi et al. 2013,
-"Finding Connected Components in Map-Reduce in Logarithmic Rounds"):
-every round each node takes the min label over its neighbors' labels,
-then labels compress by one pointer jump (label <- label's label), so
-a path of length L converges in O(log L) rounds instead of L. Each
-round is two shuffles on (node, label) pairs — 16 bytes a row at
-100 TB scale — and the loop stops when a round changes nothing.
+Every operator starts from one edge prologue, ``_edge_table``: select
+the endpoints as ``_s``/``_d``, add the reversed edges when the graph
+is undirected, distinct, barrier. With ``undirected=True`` the
+operator builds both orientations itself, so every node is a source
+and every node has an in-edge by construction: ``pagerank`` takes its
+node set from the out-degree table and needs no per-round zero-fill,
+and no caller has to promise a symmetric input.
+
+The three PageRank walks (uniform, personalized via ``teleport``, and
+grouped) share one round loop, ``_rank_rounds``. They differ only in
+the keys their rank frame carries (``_n``, or ``_g`` + ``_n``) and in
+the restart term each round joins.
+
+Two module dials:
+
+- ``BROADCAST_MAX_NODES``: every per-round join pairs the O(m)-row
+  edge table with an O(n)-row frame (ranks, labels, frontier,
+  survivors, or triangle adjacency). Catalyst cannot size that frame
+  through a checkpoint + join lineage, so without a hint it either
+  sort-merge-joins each round or broadcasts the edge side. When the
+  measured size fits, the frame is broadcast and every round is a
+  map-side hash join over the stationary edge table; past it, the
+  plans keep the shuffled joins that suit billion-node graphs.
+- ``BARRIER_MAX_EDGES``: materializing PageRank's (src, dst, degree)
+  table costs ~24 B per edge but saves a degree re-aggregation per
+  round. The 100x probe put the crossover between 1.2M edges (the
+  barrier wins, ~0.7x) and 120M (it loses, 248 s vs 176 s).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Node-frame broadcast dial shared by the iterative operators
-# (optimization r16, guide §3.1): every per-round join here pairs the
-# O(m)-row edge table with an O(n)-row node frame (ranks / labels /
-# frontier / survivor set). Catalyst cannot estimate the node frame's
-# size through a localCheckpoint + join lineage, so before this dial it
-# either sort-merge-joined (two exchanges + sorts per round) or —
-# measurably worse — broadcast the EDGE side (pagerank_supplier_parts
-# shipped the 1.2M-row weighted edge table as a BroadcastExchange once
-# per iteration). When the measured node count fits, hinting the node
-# frame makes every round a map-side hash join over the stationary
-# edge table: the only per-round shuffle left is the small partial-agg
-# exchange. Past the dial the plans fall back to the shuffled joins,
-# which is the right shape for billion-node graphs.
+from ..util import reliable_barrier
+
 BROADCAST_MAX_NODES = 8_000_000  # (long, double) rows ~ 128 MB built
 
-# Materialize-vs-recompute dial for the symmetric-pagerank weighted
-# edge table (optimization r17): barriering (src, dst, deg) costs
-# ~24 B x |E| through the executor storage layer but saves one
-# degree re-aggregation per round; the 100x probe measured the
-# crossover — at 1.2M edges the barrier wins (~0.7x), at 120M edges
-# the ~3 GB materialization LOSES to three cheap map-side re-aggs
-# (248 s vs 176 s). 16M edges ~ 384 MB keeps the materialization
-# bounded; past it the weighted table stays a lazy join over the
-# (always-barriered) distinct edge list — the right shape for
-# billion-edge graphs.
-BARRIER_MAX_EDGES = 16_000_000
+BARRIER_MAX_EDGES = 16_000_000  # ~384 MB of (src, dst, degree) rows
+
+# PageRank cuts the rank lineage every few rounds so long runs do not
+# stack unbounded plan depth
+_BARRIER_EVERY = 4
 
 
 def _maybe_broadcast(df: DataFrame, fits: bool) -> DataFrame:
     return F.broadcast(df) if fits else df
+
+
+def _edge_table(
+    edges: DataFrame, src: str, dst: str, undirected: bool = False
+) -> DataFrame:
+    """The barriered, distinct (``_s``, ``_d``) edge list every operator
+    starts from; ``undirected`` adds the reversed edge of every edge
+    before the distinct."""
+    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    if undirected:
+        e = e.unionByName(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
+    return reliable_barrier(e.distinct())
 
 
 def connected_components(
@@ -62,43 +76,43 @@ def connected_components(
     """Component labels for an undirected graph.
 
     Returns (node, component) where component = min node id reachable.
-    ``edges`` needs one row per edge in either orientation; isolated
-    nodes appear only if self-loops are included by the caller.
-    Raises if the fixpoint is not reached in ``max_iterations`` rounds
-    (log2 of the longest path; 30 covers any graph a real corpus
-    produces) rather than returning silently-wrong labels.
-    
+    When duplicate relations CHAIN (A~B, B~C, but A!~C), cluster-
+    consistent dedup needs the connected component of the similarity
+    graph, not pairwise verdicts. ``edges`` needs one row per edge in
+    either orientation; isolated nodes appear only if self-loops are
+    included by the caller.
+
+    Min-label propagation with POINTER JUMPING (the hash-to-min idea of
+    Rastogi et al. 2013, "Finding Connected Components in Map-Reduce in
+    Logarithmic Rounds"): every round each node takes the min label
+    over its neighbors' labels, then labels compress by one pointer
+    jump (label <- label's label), so a path of length L converges in
+    O(log L) rounds instead of L. The loop stops when a round changes
+    nothing, and raises if that takes more than ``max_iterations``
+    rounds (30 covers any graph a real corpus produces) rather than
+    returning silently-wrong labels.
+
     NOTE: the builder runs one eager count at plan-construction
     time (a cached-RDD count on the barriered edge/node frame) to
     set the broadcast dial — a driver-blocking action inside a
     builder API, cheap because the frame is already barriered.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(sym)
-    # broadcast dial (module note): the (node, label) frame is node-
-    # sized (<= 2|E| via the cheap barriered edge count); when it fits,
-    # the neighbor-min join and the pointer jump are map-side and the
-    # symmetric edge table never shuffles per round
+    sym = _edge_table(edges, src, dst, undirected=True)
+    # the (node, label) frame has at most 2|E| rows
     fits = 2 * sym.count() <= BROADCAST_MAX_NODES
     labels = reliable_barrier(
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nmin"))
-        .select(F.col("a").alias("node"), F.least("a", "nmin").alias("label"))
+        sym.groupBy("_s")
+        .agg(F.min("_d").alias("nmin"))
+        .select(F.col("_s").alias("node"), F.least("_s", "nmin").alias("label"))
     )
 
     for _ in range(max_iterations):
         # neighbor-min: the smallest label among my neighbors and me
         nbr = (
-            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "b"), fits), "b")
-            .groupBy("a")
+            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
+            .groupBy("_s")
             .agg(F.min("label").alias("nmin"))
-            .select(F.col("a").alias("node"), "nmin")
+            .select(F.col("_s").alias("node"), "nmin")
         )
         # carry the round-entry label as `old` so convergence is an
         # exact changed-row COUNT, not a sum of labels: with 64-bit
@@ -161,18 +175,80 @@ def dedup_by_components(
     return df.join(drop, id_col, "left_anti")
 
 
+def _rank_rounds(
+    weighted: DataFrame,
+    ranks: DataFrame,
+    restart: DataFrame | Column,
+    how: str,
+    keys: list[str],
+    iterations: int,
+    damping: float,
+    fits: bool,
+    barrier_every: int = _BARRIER_EVERY,
+) -> DataFrame:
+    """The PageRank round loop every walk shares.
+
+    ``ranks`` is the start frame (``*keys``, ``_r``); ``keys`` ends with
+    the node key ``_n``. Each round spreads every rank over its node's
+    out-edges in ``weighted`` (``_s``, ``_d``, ``_deg``), sums what
+    each key receives (``_in``), and joins the restart term ``_b``:
+
+    - a literal Column: the uniform restart, when the contributions
+      already reach every node (undirected graphs);
+    - ``how="left"``: a restart frame looked up from the contributions,
+      which reach every node (personalized walk on an undirected graph);
+    - ``how="right"``: a restart frame that lists every node, which the
+      contributions are joined onto (directed graphs, whose source-only
+      nodes receive nothing);
+    - ``how="full_outer"``: sparse frames on both sides (grouped walk).
+
+    rank = (1-d) * restart + d * received. Each barrier also re-measures
+    the broadcast dial on the frame it materialized.
+    """
+    for i in range(iterations):
+        contribs = (
+            weighted.join(
+                _maybe_broadcast(ranks.withColumnRenamed("_n", "_s"), fits), "_s"
+            )
+            .select(
+                *keys[:-1],
+                F.col("_d").alias("_n"),
+                (F.col("_r") / F.col("_deg")).alias("_c"),
+            )
+            .groupBy(*keys)
+            .agg(F.sum("_c").alias("_in"))
+        )
+        if isinstance(restart, Column):
+            step = contribs.withColumn("_b", restart)
+        elif how == "right":
+            # the right join's rows, written as a left join so the
+            # contributions are the side that can be broadcast
+            step = restart.join(_maybe_broadcast(contribs, fits), keys, "left")
+        else:
+            step = contribs.join(restart, keys, how)
+        ranks = step.select(
+            *keys,
+            (
+                (1.0 - damping) * F.coalesce(F.col("_b"), F.lit(0.0))
+                + damping * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("_r"),
+        )
+        if (i + 1) % barrier_every == 0 and i + 1 < iterations:
+            ranks = reliable_barrier(ranks)
+            fits = ranks.count() <= BROADCAST_MAX_NODES
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    barrier_every: int = 4,
     teleport: DataFrame | None = None,
-    symmetric: bool = False,
+    undirected: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank (Page et al. 1999) as DataFrame joins —
-    the second iterative-algorithm class next to connected_components.
+    """Fixed-iteration PageRank (Page et al. 1999) as DataFrame joins.
     Returns (node, rank) after ``iterations`` synchronous updates from
     a uniform start: rank = (1-d)/N + d * sum(in-neighbor rank / its
     out-degree).
@@ -182,206 +258,83 @@ def pagerank(
     (1-d) concentrates uniformly on the seed set instead of all
     nodes, and the walk starts from the seeds — relevance-to-the-
     seeds ranking, the data-selection primitive ("expand from these
-    known-good suppliers/domains"). The seed frame is joined once as
-    a flag onto the slim node table; per-iteration cost is unchanged.
-    NOTE: the builder runs one eager node count at plan-construction
-    time (a cached-RDD count on the barriered node table — it is the
-    uniform-restart denominator and the broadcast dial), plus, when
-    ``teleport`` is given, the one-row |S| > 0 validation aggregate.
+    known-good suppliers/domains"). Raises ``ValueError`` when no seed
+    appears in the edge list (the restart denominator |S| would be 0).
 
-    Dangling nodes (out-degree 0) keep their rank mass out of play —
-    the caller symmetrizes the edge set when that matters (an
-    undirected graph has none by construction).
+    ``undirected=True`` reads each row of ``edges`` as an undirected
+    edge: the operator adds the reversed edges before its distinct, so
+    the walk sees both orientations of every edge. Then every node is a
+    source, so the node table IS the out-degree table's key column, and
+    every node has an in-edge, so each round's contributions reach
+    every node and no zero-fill join is needed. On a directed graph
+    (the default), dangling nodes (out-degree 0) keep their rank mass
+    out of play, and source-only nodes keep only the restart mass.
 
-    100 TB shape: each iteration is ONE equi-join of the slim
-    (node, rank) table onto the edge list plus a groupBy sum — the
-    classic map-reduce PageRank; the edge table and degree table are
-    computed once and reused (barrier), and the rank lineage is cut
-    every ``barrier_every`` iterations so long runs do not stack
-    unbounded plan depth. When the measured node count fits
-    ``BROADCAST_MAX_NODES``, the (node, rank) frame is broadcast into
-    the per-round joins (module dial note) so the edge table is never
-    shuffled or broadcast per round; larger graphs fall back to the
-    shuffled joins unchanged.
+    100 TB shape: each round is ONE equi-join of the slim (node, rank)
+    table onto the (src, dst, out-degree) table plus a groupBy sum (see
+    ``_rank_rounds``). The weighted table is built once, behind a
+    barrier while it fits ``BARRIER_MAX_EDGES``; the rank frame is
+    broadcast into the per-round joins while |V| fits
+    ``BROADCAST_MAX_NODES``.
 
-    ``symmetric=True`` declares (caller contract — the builder does not
-    re-verify it) that the edge set contains BOTH orientations of every
-    edge, which two structural facts make cheaper without changing a
-    single output row (optimization r17, guide §2.1/§3.1):
-
-    - every node appears as a source, so the node table IS the degree
-      table's key column — the 2|E|-row union + distinct node pass
-      disappears;
-    - every node has at least one in-edge, so the per-round contribs
-      aggregate already covers every node and the per-round
-      nodes-left-join (the zero-fill for in-degree-0 nodes) is dead
-      code — each round is just join + aggregate + (for PPR) one
-      broadcast join against the |S|-row restart frame;
-    - the (edge ⋈ out-degree) table is materialized ONCE behind a
-      barrier instead of re-deriving the degree aggregate inside every
-      round's plan.
+    NOTE: the builder runs eager actions at plan-construction time: one
+    aggregate over the barriered degree table (|V| and |E| for the two
+    dials; directed graphs count their barriered node table for |V|),
+    plus, when ``teleport`` is given, the one-row |S| aggregate.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    if symmetric:
-        return _pagerank_symmetric(e, deg, iterations, damping, barrier_every, teleport)
-    nodes = reliable_barrier(
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-    )
-    # |V| once, from the barriered slim table (a cheap cached-RDD count):
-    # it is both the uniform-restart denominator — previously re-derived
-    # every round as a crossJoin'd broadcast aggregate, four extra
-    # exchanges per run — and the broadcast dial for the per-round joins.
-    n_nodes = nodes.count()
-    fits = n_nodes <= BROADCAST_MAX_NODES
-    if teleport is not None:
-        seeds = teleport.select(F.col("node")).distinct()
-        nodes = nodes.join(
-            seeds.withColumn("_seed", F.lit(1)), "node", "left"
-        ).select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
-        nodes = reliable_barrier(nodes)
-        # |S| after intersecting seeds with the graph's node set: if
-        # no seed appears in the edge list the denominator is 0 and
-        # every rank would silently become NULL — fail loudly instead
-        # (one-row aggregate over the already-barriered slim table).
-        n_seeds = nodes.agg(F.sum("_seed").cast("long").alias("_n")).collect()[0]["_n"]
-        if not n_seeds:
-            raise ValueError(
-                "pagerank(teleport=...): no teleport seed appears in the "
-                "edge list; restart mass denominator |S| is 0"
-            )
-        # |S| is already on the driver — a literal, same integer/integer
-        # double division as the previous broadcast-column form.
-        base = F.col("_seed") / F.lit(int(n_seeds))
+    e = _edge_table(edges, src, dst, undirected)
+    deg = reliable_barrier(e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg")))
+    sizes = deg.agg(F.count(F.lit(1)).alias("n"), F.sum("_deg").alias("m")).first()
+    if undirected:
+        nodes, n_nodes = deg.select(F.col("_s").alias("_n")), sizes["n"]
     else:
-        nodes = nodes.withColumn("_seed", F.lit(1))
-        # same IEEE double as the previous runtime 1.0 / count division
-        base = F.lit(1.0 / n_nodes)
-    ranks = nodes.select("node", base.alias("rank"))
-    weighted = e.join(deg, "_s")  # (src, dst, out-degree), static per run
-    for i in range(iterations):
-        contribs = (
-            weighted.join(
-                _maybe_broadcast(ranks.withColumnRenamed("node", "_s"), fits), "_s"
-            )
-            .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
+        nodes = reliable_barrier(
+            e.select(F.col("_s").alias("_n"))
+            .unionByName(e.select(F.col("_d").alias("_n")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(_maybe_broadcast(contribs, fits), "node", "left")
-            .select(
-                "node",
-                (
-                    (1.0 - damping) * base
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % barrier_every == 0 and i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
-    return ranks
-
-
-def _pagerank_symmetric(
-    e: DataFrame,
-    deg: DataFrame,
-    iterations: int,
-    damping: float,
-    barrier_every: int,
-    teleport: DataFrame | None,
-) -> DataFrame:
-    """``pagerank`` body under the symmetric-edge-set contract (see the
-    public docstring): nodes come from the degree table, the weighted
-    edge table is barriered once, and the per-round zero-fill join is
-    skipped because contribs is provably dense. Arithmetic is kept
-    expression-for-expression identical to the general path so the two
-    produce bit-identical ranks on a symmetric input."""
-    from ..util import reliable_barrier
-
-    deg = reliable_barrier(deg)
-    # one aggregate supplies both dials: |V| (rows of the degree table)
-    # and |E| (sum of out-degrees) — no separate edge-count job
-    sizes = deg.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("_deg").alias("m")
-    ).first()
-    n_nodes, m_edges = sizes["n"], int(sizes["m"] or 0)
+        n_nodes = nodes.count()
     fits = n_nodes <= BROADCAST_MAX_NODES
-    nodes = deg.select(F.col("_s").alias("node"))
-    seed_base = None
-    if teleport is not None:
-        seeds = teleport.select(F.col("node")).distinct()
+    weighted = e.join(_maybe_broadcast(deg, fits), "_s")
+    if int(sizes["m"] or 0) <= BARRIER_MAX_EDGES:
+        weighted = reliable_barrier(weighted)
+    if teleport is None:
+        base = F.lit(1.0 / n_nodes)
+        start = nodes.select("_n", base.alias("_r"))
+        restart = base if undirected else nodes.select("_n", base.alias("_b"))
+    else:
+        seeds = teleport.select(F.col("node").alias("_n")).distinct()
         # barrier: consumed three times (|S| aggregate, rank start,
         # restart frame) — without it each consumer re-runs the seed
         # frame's own source scan
         flagged = reliable_barrier(
-            nodes.join(
-                seeds.withColumn("_seed", F.lit(1)), "node", "left"
-            ).select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
+            nodes.join(seeds.withColumn("_seed", F.lit(1)), "_n", "left").select(
+                "_n", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed")
+            )
         )
-        n_seeds = flagged.agg(F.sum("_seed").cast("long").alias("_n")).collect()[0]["_n"]
+        n_seeds = flagged.agg(F.sum("_seed").cast("long")).collect()[0][0]
         if not n_seeds:
             raise ValueError(
                 "pagerank(teleport=...): no teleport seed appears in the "
                 "edge list; restart mass denominator |S| is 0"
             )
-        # same int/int -> double division as the general path's
-        # _seed / lit(|S|) column (with _seed == 1 on this frame)
         base = F.col("_seed") / F.lit(int(n_seeds))
-        ranks = flagged.select("node", base.alias("rank"))
-        # the restart frame carries only the |S| seed rows — the
-        # per-round join against it broadcasts |S| rows, not |V|
-        seed_base = F.broadcast(
-            reliable_barrier(
-                flagged.filter(F.col("_seed") == 1).select("node", base.alias("_b"))
-            )
-        )
-    else:
-        base = F.lit(1.0 / n_nodes)
-        ranks = nodes.select("node", base.alias("rank"))
-    weighted = e.join(_maybe_broadcast(deg, fits), "_s")
-    if m_edges <= BARRIER_MAX_EDGES:  # module dial note: bounded bytes
-        weighted = reliable_barrier(weighted)
-    for i in range(iterations):
-        contribs = (
-            weighted.join(
-                _maybe_broadcast(ranks.withColumnRenamed("node", "_s"), fits), "_s"
-            )
-            .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        # contribs covers every node (symmetric contract), so build the
-        # next rank frame from it directly; only PPR needs the restart
-        # term joined back, from the |S|-row frame. coalesce(_in, .)
-        # never fires here — kept so the expression matches the general
-        # path exactly.
-        if seed_base is not None:
-            restart = F.coalesce(F.col("_b"), F.lit(0.0))
-            ranks = contribs.join(seed_base, "node", "left").select(
-                "node",
-                (
-                    (1.0 - damping) * restart
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
+        start = flagged.select("_n", base.alias("_r"))
+        if undirected:
+            # only the |S| seed rows carry restart mass: the per-round
+            # lookup broadcasts |S| rows, not |V|
+            restart = F.broadcast(
+                reliable_barrier(
+                    flagged.filter(F.col("_seed") == 1).select("_n", base.alias("_b"))
+                )
             )
         else:
-            ranks = contribs.select(
-                "node",
-                (
-                    (1.0 - damping) * base
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % barrier_every == 0 and i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
-    return ranks
+            restart = flagged.select("_n", base.alias("_b"))
+    ranks = _rank_rounds(
+        weighted, start, restart, "left" if undirected else "right",
+        ["_n"], iterations, damping, fits,
+    )
+    return ranks.select(F.col("_n").alias("node"), F.col("_r").alias("rank"))
 
 
 def pagerank_grouped(
@@ -408,17 +361,15 @@ def pagerank_grouped(
     table, so g tenants cost one pass over g·|reached| rank rows
     instead of g engine runs re-scanning the graph. Nodes outside a
     group's reach simply never materialize (sparse frames, not a
-    dense nodes×groups grid).
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
-    """
-    from ..util import reliable_barrier
+    dense nodes×groups grid). Because those frames grow from round to
+    round, the walk barriers every round, and each barrier re-measures
+    the broadcast dial on the actual (grp, node, rank) rows.
 
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
+    NOTE: the builder runs eager counts at plan-construction time (one
+    on the barriered seed table, one per barriered round) to set the
+    broadcast dial — cheap cached-RDD counts.
+    """
+    e = _edge_table(edges, src, dst)
     deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
     weighted = reliable_barrier(e.join(deg, "_s"))
     sd = seeds.select(F.col(grp).alias("_g"), F.col(node).alias("_n")).distinct()
@@ -428,37 +379,11 @@ def pagerank_grouped(
             "_g", "_n", (F.lit(1.0) / F.col("_k")).alias("_b")
         )
     )
-    ranks = base.select("_g", "_n", F.col("_b").alias("_r"))
-    # broadcast dial (module note), per round on the MATERIALIZED rank
-    # frame: round 0's frame is the barriered seed table and each later
-    # round's frame sits behind the in-loop barrier, so every count is
-    # a cheap cached-RDD count of the actual (grp, node, rank) rows —
-    # no g x |V| worst-case guess. When it fits, the weighted edge
-    # table is never shuffled per round.
-    fits = base.count() <= BROADCAST_MAX_NODES
-    for i in range(iterations):
-        contribs = (
-            weighted.join(
-                _maybe_broadcast(ranks.withColumnRenamed("_n", "_s"), fits), "_s"
-            )
-            .select("_g", F.col("_d").alias("_n"), (F.col("_r") / F.col("_deg")).alias("_c"))
-            .groupBy("_g", "_n")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            contribs.join(base, ["_g", "_n"], "full_outer")
-            .select(
-                "_g",
-                "_n",
-                (
-                    F.lit(1.0 - damping) * F.coalesce(F.col("_b"), F.lit(0.0))
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("_r"),
-            )
-        )
-        if i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
-            fits = ranks.count() <= BROADCAST_MAX_NODES
+    ranks = _rank_rounds(
+        weighted, base.select("_g", "_n", F.col("_b").alias("_r")), base,
+        "full_outer", ["_g", "_n"], iterations, damping,
+        base.count() <= BROADCAST_MAX_NODES, barrier_every=1,
+    )
     return ranks.select(
         F.col("_g").alias(grp), F.col("_n").alias(node), F.col("_r").alias("rank")
     )
@@ -471,9 +396,7 @@ def label_propagation(
     iterations: int = 2,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007, "Near
-    linear time algorithm to detect community structures") — the
-    third iterative-algorithm class next to connected_components and
-    pagerank. Every node starts labeled with itself; each round it
+    linear time algorithm to detect community structures"). Every node starts labeled with itself; each round it
     adopts the MOST FREQUENT label among its neighbors, ties broken
     by the smallest label (the deterministic variant — the paper's
     random tie-break is unreproducible across engines). Returns
@@ -490,54 +413,45 @@ def label_propagation(
     sort-window — two shuffles a round on 16-byte rows, no per-round
     sort; the edge list is computed once behind a barrier and reused
     every round.
-    
+
     NOTE: the builder runs one eager count at plan-construction
     time (a cached-RDD count on the barriered edge/node frame) to
     set the broadcast dial — a driver-blocking action inside a
     builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    # broadcast dial (module note): the (node, label) frame is node-
-    # sized; when it fits, each round's label join is map-side over the
-    # stationary symmetric edge table
+    sym = _edge_table(edges, src, dst, undirected=True)
+    # the (node, label) frame has at most 2|E| rows
     fits = 2 * sym.count() <= BROADCAST_MAX_NODES
-    labels = sym.select(F.col("a").alias("node")).distinct().select(
+    labels = sym.select(F.col("_s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for r in range(iterations):
         if r == 0:
-            # Round 1 on identity labels needs no join and no count
-            # (optimization r17, guide §2.2): every neighbor carries
-            # its OWN distinct label, so each (a, label) count is
-            # exactly 1 and the (count DESC, label ASC) winner is just
-            # the minimum neighbor id — one map-side-combined min
-            # aggregate over the barriered edge table replaces the
-            # label join and the two-level count/min_by pair.
-            labels = sym.groupBy("a").agg(F.min("b").alias("label")).select(
-                F.col("a").alias("node"), "label"
+            # Round 1 on identity labels needs no join and no count:
+            # every neighbor carries its OWN distinct label, so each
+            # (node, label) count is exactly 1 and the (count DESC,
+            # label ASC) winner is just the minimum neighbor id — one
+            # map-side-combined min aggregate over the barriered edge
+            # table.
+            labels = sym.groupBy("_s").agg(F.min("_d").alias("label")).select(
+                F.col("_s").alias("node"), "label"
             )
             continue
         counted = (
-            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "b"), fits), "b")
-            .groupBy("a", "label")
+            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
+            .groupBy("_s", "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
         # top-1 via min_by over the (-count, label) struct — lexical
         # struct ordering IS the (count DESC, label ASC) rule — a hash
         # aggregate with map-side combine instead of a full sort-window
         # per round
-        labels = counted.groupBy("a").agg(
+        labels = counted.groupBy("_s").agg(
             F.min_by(
                 "label",
                 F.struct((-F.col("_c")).alias("_k1"), F.col("label").alias("_k2")),
             ).alias("label")
-        ).select(F.col("a").alias("node"), "label")
+        ).select(F.col("_s").alias("node"), "label")
     return labels
 
 
@@ -545,15 +459,10 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast: bool | str = "auto",
-    broadcast_max_edges: int = 8_000_000,
-    orient: str = "id",
 ) -> DataFrame:
-    """Global triangle census — the fourth graph-algorithm class next
-    to connected components, PageRank, and label propagation. Returns
-    ONE row (n_nodes, n_edges, n_triangles) for the undirected simple
-    graph behind ``edges`` (self-loops dropped, orientation and
-    duplicates normalized away).
+    """Global triangle census. Returns ONE row (n_nodes, n_edges,
+    n_triangles) for the undirected simple graph behind ``edges``
+    (self-loops dropped, orientation and duplicates normalized away).
 
     Adjacency-intersection shape: canonicalize every edge to a < b,
     build each node's sorted out-neighbor array ONCE, then for every
@@ -563,99 +472,45 @@ def triangle_count(
     100 TB shape: this shuffles O(m) edge rows and O(n) adjacency
     rows, NOT the O(sum deg²) wedge set a join-based closure
     materializes (the wedge plan measured 16s where this one runs ~2s
-    at sf0.1 — DuckDB-competitive). The intersection itself runs in
-    whole-stage codegen over the two arrays.
+    at sf0.1). The intersection itself runs in whole-stage codegen
+    over the two arrays.
 
-    ``broadcast`` guards the adjacency-table hint (VERDICT r10 #3 —
-    the hint used to be unconditional, an executor-memory blowup at
-    billions of edges with no way to turn it off):
+    The adjacency table holds exactly m neighbor longs plus n keys, so
+    it is broadcast while the deduplicated edge count fits
+    ``BROADCAST_MAX_NODES`` (8M edges ~ 64 MB of array payload): the
+    per-edge intersection is then map-side and the ~deg-sized arrays
+    are never shipped once per edge row (19.5s -> ~4s at sf0.1). Past
+    the dial the same plan shuffles both sides, which survives billions
+    of edges.
 
-    - ``"auto"`` (default): broadcast iff the deduplicated edge count
-      — already materialized by the barrier, so the count is a cheap
-      metadata scan — is at most ``broadcast_max_edges``. The
-      adjacency table holds exactly m neighbor longs plus n keys, so
-      edge count IS its size: 8M edges ≈ 64 MB of array payload, safe
-      for executor broadcast; past that the same plan shuffles both
-      sides (sort-merge / shuffled-hash, AQE's pick).
-    - ``True`` / ``False``: force the hint on or off.
-
-    Broadcasting makes the per-edge intersection map-side so the
-    ~deg-sized arrays are never shipped once per edge row (measured
-    19.5s -> ~4s at sf0.1; the shuffle of two ~100-long arrays with
-    each of 1.2M edge rows was the whole cost).
-
-    ``orient="degree"`` re-orients edges from low-degree to
-    high-degree endpoints (compact-forward, Schank & Wagner 2005)
-    before building adjacency: out-degrees are then bounded by
-    O(sqrt(m)) even on power-law graphs, keeping hub arrays — and the
-    per-edge intersection cost — small. The default ``"id"`` keeps the
-    a < b orientation (the co-order fixture is near-regular, max
-    out-degree 199, where id order is already balanced and skips the
-    degree join).
+    NOTE: the builder runs one eager count at plan-construction time (a
+    cached-RDD count on the barriered edge list) to set the dial.
     """
-    if broadcast not in ("auto", True, False):
-        raise ValueError(f"broadcast must be 'auto', True or False: {broadcast!r}")
-    if orient not in ("id", "degree"):
-        raise ValueError(f"orient must be 'id' or 'degree': {orient!r}")
-    a, b = F.col("_a"), F.col("_b")
-    canon = (
+    e = _edge_table(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_a"),
             F.greatest(F.col(src), F.col(dst)).alias("_b"),
+        ).filter(F.col("_a") != F.col("_b")),
+        "_a",
+        "_b",
+    )
+    adj = _maybe_broadcast(
+        e.groupBy("_s").agg(F.sort_array(F.collect_list("_d")).alias("_nbrs")),
+        e.count() <= BROADCAST_MAX_NODES,
+    )
+    closed = (
+        e.join(adj, "_s")
+        .join(
+            adj.select(F.col("_s").alias("_d"), F.col("_nbrs").alias("_nbrs_d")),
+            "_d",
         )
-        .filter(a != b)
+        .select(F.size(F.array_intersect("_nbrs", "_nbrs_d")).alias("_t"))
+    )
+    nodes = (
+        e.select(F.col("_s").alias("n"))
+        .unionByName(e.select(F.col("_d").alias("n")))
         .distinct()
     )
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(canon)
-    if orient == "degree":
-        # Degree rank (deg, id) totally orders nodes; orient every
-        # edge from lower to higher rank. Each triangle is then
-        # counted exactly once, at its lowest-ranked vertex, and
-        # out(u) only holds higher-ranked neighbors — at most
-        # O(sqrt(m)) of them for ANY degree distribution.
-        deg = (
-            e.select(a.alias("_n"))
-            .unionByName(e.select(b.alias("_n")))
-            .groupBy("_n")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-        )
-        da = deg.select(F.col("_n").alias("_a"), F.col("_deg").alias("_da"))
-        db = deg.select(F.col("_n").alias("_b"), F.col("_deg").alias("_db"))
-        lower_first = (F.col("_da") < F.col("_db")) | (
-            (F.col("_da") == F.col("_db")) & (a < b)
-        )
-        oriented = (
-            e.join(da, "_a")
-            .join(db, "_b")
-            .select(
-                F.when(lower_first, a).otherwise(b).alias("_u"),
-                F.when(lower_first, b).otherwise(a).alias("_v"),
-            )
-            .select(F.col("_u").alias("_a"), F.col("_v").alias("_b"))
-        )
-        adj_base = reliable_barrier(oriented)
-    else:
-        adj_base = e
-    adj = adj_base.groupBy("_a").agg(
-        F.sort_array(F.collect_list("_b")).alias("_nbrs")
-    )
-    do_broadcast = (
-        broadcast if broadcast in (True, False) else e.count() <= broadcast_max_edges
-    )
-    if do_broadcast:
-        adj = F.broadcast(adj)
-    e = adj_base
-    closed = (
-        e.join(adj, "_a")
-        .join(
-            adj.select(F.col("_a").alias("_b"), F.col("_nbrs").alias("_nbrs_b")),
-            "_b",
-        )
-        .select(F.size(F.array_intersect("_nbrs", "_nbrs_b")).alias("_t"))
-    )
-    nodes = e.select(a.alias("n")).unionByName(e.select(b.alias("n"))).distinct()
     return (
         e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
         .crossJoin(nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes")))
@@ -673,8 +528,7 @@ def hits(
     iterations: int = 2,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, "Authoritative
-    sources in a hyperlinked environment") — the ninth iterative-
-    algorithm class. On a DIRECTED graph, a good hub points at good
+    sources in a hyperlinked environment"). On a DIRECTED graph, a good hub points at good
     authorities and a good authority is pointed at by good hubs:
     each synchronous round computes auth(v) = Σ hub(u) over in-edges
     then hub(u) = Σ auth(v) over out-edges, L1-normalizing after each
@@ -693,34 +547,28 @@ def hits(
     behind a barrier; per-round lineage is cut by the barrier on the
     hub frame.
 
-    Optimization r17 (guide §2.1): the score frames stay SPARSE
-    through the rounds — hubs over out-nodes, auths over in-nodes —
-    because a node outside those sets carries exactly 0.0 and a 0.0
-    score contributes nothing to either half-step sum or to the L1
-    mass. The dense zero rows the previous shape materialized through
-    two per-round node-left-joins are reconstructed ONCE at the end by
-    the final zero-fill join, which is also where the pure-sink hub=0 /
-    pure-source auth=0 exactness comes from (coalesce to literal 0.0).
-    
+    The score frames stay SPARSE through the rounds — hubs over
+    out-nodes, auths over in-nodes — because a node outside those sets
+    carries exactly 0.0 and a 0.0 score contributes nothing to either
+    half-step sum or to the L1 mass. The zero rows are filled in ONCE
+    at the end by the final zero-fill join, which is also where the
+    pure-sink hub=0 / pure-source auth=0 exactness comes from (coalesce
+    to literal 0.0).
+
     NOTE: the builder runs one eager count at plan-construction
     time (a cached-RDD count on the barriered edge/node frame) to
     set the broadcast dial — a driver-blocking action inside a
     builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
-    # broadcast dial (module note): the per-half-step score frames are
-    # node-bounded (|V| <= 2|E| via the cheap barriered edge count)
+    e = _edge_table(edges, src, dst)
+    # the per-half-step score frames have at most |V| <= 2|E| rows
     fits = 2 * e.count() <= BROADCAST_MAX_NODES
     # sparse uniform start: only out-node hub values ever feed the
-    # auth half-step, so the sink rows of the dense 1.0 start were dead
+    # auth half-step
     hubs = e.select(F.col("_s").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("hub")
     )
-    if iterations <= 0:  # degenerate: the dense uniform start, as before
+    if iterations <= 0:  # degenerate: the dense uniform start
         return (
             e.select(F.col("_s").alias("node"))
             .unionByName(e.select(F.col("_d").alias("node")))
@@ -778,7 +626,7 @@ def bfs_hops(
     node: str = "node",
     iterations: int = 3,
 ) -> DataFrame:
-    """Multi-source BFS hop distances (r11) — the frontier-relaxation
+    """Multi-source BFS hop distances — the frontier-relaxation
     sibling of ``connected_components``: starting from ``seeds`` at
     hop 0, each synchronous round relaxes
     ``dist'(v) = min(dist(v), min over in-edges dist(u) + 1)`` and the
@@ -791,20 +639,14 @@ def bfs_hops(
     same slim-pair/barrier-per-round discipline as the other iterative
     operators — no frontier ever re-materializes prior rounds through
     lineage). Rounds shuffle O(m) join rows and O(n) aggregate rows.
-    
+
     NOTE: the builder runs one eager count at plan-construction
     time (a cached-RDD count on the barriered edge/node frame) to
     set the broadcast dial — a driver-blocking action inside a
     builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
-    # broadcast dial (module note): the (node, hop) frontier is bounded
-    # by |V| <= 2|E|; the barriered edge count is a cheap cached-RDD
-    # count (no extra distinct pass), so dial on that conservative bound
+    e = _edge_table(edges, src, dst)
+    # the (node, hop) frontier has at most |V| <= 2|E| rows
     fits = 2 * e.count() <= BROADCAST_MAX_NODES
     nd = reliable_barrier(
         seeds.select(F.col(node).alias("_n")).distinct().select(
@@ -828,8 +670,7 @@ def k_core_peel(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """k-core peeling (r11) — the eighth iterative-algorithm class:
-    each round drops every node whose CURRENT degree is below ``k``
+    """k-core peeling: each round drops every node whose CURRENT degree is below ``k``
     (and the edges touching it), the standard densest-region filter
     (Seidman 1983, "Network structure and minimum degree") used to
     trim low-signal periphery before community/triangle analysis.
@@ -842,26 +683,18 @@ def k_core_peel(
     smaller) survivor set — slim integer keys only, barriered per
     round like the other iterative operators. Peeling cascades:
     survivors shrink monotonically, so later rounds cost less.
-    
+
     NOTE: the builder runs one eager count at plan-construction
     time (a cached-RDD count on the barriered edge/node frame) to
     set the broadcast dial — a driver-blocking action inside a
     builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .unionByName(
-            edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-        )
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
+    sym = _edge_table(
+        edges.filter(F.col(src) != F.col(dst)), src, dst, undirected=True
     )
-    # broadcast dial (module note): the survivor set is node-sized
-    # (<= 2|E| via the cheap barriered edge count); broadcasting it
-    # makes both per-round semi-joins map-side — the symmetric edge
-    # table is never shuffled while peeling
+    # the survivor set has at most 2|E| rows; broadcasting it makes
+    # both per-round semi-joins map-side — the symmetric edge table is
+    # never shuffled while peeling
     fits = 2 * sym.count() <= BROADCAST_MAX_NODES
     for _ in range(iterations):
         keep = reliable_barrier(

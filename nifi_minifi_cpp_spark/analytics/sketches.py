@@ -558,7 +558,9 @@ def poisson_bootstrap_mean_ci(
         F.count(F.lit(1)).alias("n_rows"),
         F.floor(1000 * F.sum("cents") / F.count(F.lit(1))).cast("long").alias("mean_millicents"),
     )
-    return point.join(ci, "g").select(
+    # left join: a group whose every id is NULL has no replicate, but
+    # keeps its point row with NULL bounds
+    return point.join(ci, "g", "left").select(
         F.col("g").alias(group_col),
         "n_rows",
         "mean_millicents",

@@ -1,4 +1,4 @@
-"""Vectorized MD5 (RFC 1321) as numpy uint32 lane arithmetic.
+"""Vectorized MD5 (RFC 1321) and XXH64 as numpy lane arithmetic.
 
 Several oracle-pinned operators draw deterministic randomness from md5
 over short per-row messages (the Poisson-bootstrap replicate lanes, the
@@ -9,6 +9,8 @@ messages as ~64 vector operations per 64-byte block instead of one
 scalar JVM call per row — the guide §4.2 vectorization recipe applied
 to the hash itself. Parity with ``hashlib.md5`` (== Spark's ``md5``,
 both implement the RFC) is pinned in tests/test_vectorized_kernels.py.
+``xxh64_rows`` does the same for Spark's ``xxhash64`` (the k-gram
+fingerprints of ``containment_dedup``).
 """
 
 from __future__ import annotations
@@ -102,3 +104,70 @@ def md5_hex(mat: np.ndarray, length: int) -> np.ndarray:
     hx[:, 0::2] = lut[nib_hi]
     hx[:, 1::2] = lut[nib_lo]
     return hx.view("S32").reshape(-1)
+
+
+# --- vectorized XXH64 ----------------------------------------------------
+# Bit-exact reimplementation of Spark's ``xxhash64`` (XXH64, seed 42;
+# Collet's reference algorithm — public spec) as numpy uint64 lane
+# arithmetic, so ``containment_dedup``'s per-position k-gram hashing
+# (one JVM substring allocation + one scalar hash per char position)
+# becomes one vectorized pass. Pinned bit-for-bit against the Spark expression in
+# tests/test_vectorized_kernels.py on an adversarial corpus (ASCII,
+# multibyte, astral plane, window-straddling chars, k < 8 / 8..31 /
+# >= 32 byte message lengths — every branch of the algorithm).
+_XXP1 = 0x9E3779B185EBCA87
+_XXP2 = 0xC2B2AE3D27D4EB4F
+_XXP3 = 0x165667B19E3779F9
+_XXP4 = 0x85EBCA77C2B2AE63
+_XXP5 = 0x27D4EB2F165667C5
+_XX_SEED = 42
+
+
+def xxh64_rows(mat, length: int):
+    """XXH64 (seed 42) of each row of ``mat`` — a C-contiguous (n, W)
+    uint8 matrix, W a multiple of 8, zero-padded past ``length`` (the
+    true message byte length, identical for every row). Returns int64
+    hashes bit-identical to Spark's ``xxhash64`` over the same bytes."""
+    u = np.uint64
+    p1, p2, p3, p4, p5 = u(_XXP1), u(_XXP2), u(_XXP3), u(_XXP4), u(_XXP5)
+
+    def rotl(x, r):
+        return (x << u(r)) | (x >> u(64 - r))
+
+    n = mat.shape[0]
+    words = mat.view(u)  # little-endian lanes, as the spec reads them
+    dwords = mat.view(np.uint32)
+    off = 0
+    if length >= 32:
+        v1 = np.full(n, u((_XX_SEED + _XXP1 + _XXP2) % 2**64), dtype=u)
+        v2 = np.full(n, u((_XX_SEED + _XXP2) % 2**64), dtype=u)
+        v3 = np.full(n, u(_XX_SEED), dtype=u)
+        v4 = np.full(n, u((_XX_SEED - _XXP1) % 2**64), dtype=u)
+        for s in range(length // 32):
+            b = 4 * s
+            v1 = rotl(v1 + words[:, b] * p2, 31) * p1
+            v2 = rotl(v2 + words[:, b + 1] * p2, 31) * p1
+            v3 = rotl(v3 + words[:, b + 2] * p2, 31) * p1
+            v4 = rotl(v4 + words[:, b + 3] * p2, 31) * p1
+        h = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
+        for v in (v1, v2, v3, v4):
+            h = (h ^ (rotl(v * p2, 31) * p1)) * p1 + p4
+        off = (length // 32) * 32
+    else:
+        h = np.full(n, u((_XX_SEED + _XXP5) % 2**64), dtype=u)
+    h = h + u(length)
+    while off + 8 <= length:
+        h = rotl(h ^ (rotl(words[:, off // 8] * p2, 31) * p1), 27) * p1 + p4
+        off += 8
+    if off + 4 <= length:
+        h = rotl(h ^ (dwords[:, off // 4].astype(u) * p1), 23) * p2 + p3
+        off += 4
+    while off < length:
+        h = rotl(h ^ (mat[:, off].astype(u) * p5), 11) * p1
+        off += 1
+    h ^= h >> u(33)
+    h *= p2
+    h ^= h >> u(29)
+    h *= p3
+    h ^= h >> u(32)
+    return h.view(np.int64)

@@ -287,6 +287,12 @@ def test_triangle_count_known_graphs(spark):
     row = triangle_count(path).collect()[0]
     assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 3, 0)
 
+    # star hub 0 joined to a ring over 1..8: triangles are exactly the
+    # (0, i, i+1) fans = 8; hub degree 8 vs ring degree 3
+    hub = [(0, i) for i in range(1, 9)] + [(i, i % 8 + 1) for i in range(1, 9)]
+    row = triangle_count(spark.createDataFrame(hub, "src long, dst long")).collect()[0]
+    assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (9, 16, 8)
+
 
 def test_graph_ops_invariant_to_input_order(spark):
     """The driver hash-compares results, so the iterative graph ops
@@ -322,12 +328,12 @@ def test_graph_ops_invariant_to_input_order(spark):
     assert tuple(t1) == tuple(t2)
 
 
-def test_triangle_count_broadcast_guard_plans(spark):
-    """VERDICT r10 #3: the adjacency broadcast must be droppable.
-    broadcast=True pins a broadcast join on the adjacency table;
-    broadcast=False (and auto past the edge threshold) must produce a
-    shuffle join instead — the plan that survives billions of edges."""
-    from nifi_minifi_cpp_spark.analytics.graph import triangle_count
+def test_triangle_count_broadcast_guard_plans(spark, monkeypatch):
+    """The adjacency broadcast is driven by graph.BROADCAST_MAX_NODES:
+    under the dial the plan broadcasts the adjacency table; with the
+    dial at 0 it must shuffle-join instead — the plan that survives
+    billions of edges. Both plans count K4 exactly."""
+    from nifi_minifi_cpp_spark.analytics import graph
 
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     df = spark.createDataFrame(k4, "src long, dst long")
@@ -335,55 +341,97 @@ def test_triangle_count_broadcast_guard_plans(spark):
     def plan_of(frame):
         return frame._jdf.queryExecution().executedPlan().toString()
 
-    forced = plan_of(triangle_count(df, broadcast=True))
-    assert "BroadcastHashJoin" in forced
+    def counts(frame):
+        row = frame.collect()[0]
+        return (row["n_nodes"], row["n_edges"], row["n_triangles"])
+
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 10**9)
+    broadcast = graph.triangle_count(df)
+    assert "BroadcastHashJoin" in plan_of(broadcast)
+    assert counts(broadcast) == (4, 6, 4)
 
     # prevent AQE/auto-broadcast from re-introducing a broadcast so the
-    # guard itself is what's under test
+    # dial itself is what's under test
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        off = triangle_count(df, broadcast=False)
-        plan = plan_of(off)
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+        shuffled = graph.triangle_count(df)
+        plan = plan_of(shuffled)
         assert "BroadcastHashJoin" not in plan
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
-        row = off.collect()[0]
-        assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 6, 4)
-
-        # auto with a tiny threshold routes to the shuffle plan too
-        auto_small = triangle_count(df, broadcast="auto", broadcast_max_edges=2)
-        assert "BroadcastHashJoin" not in plan_of(auto_small)
+        assert counts(shuffled) == (4, 6, 4)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        triangle_count(df, broadcast="always")
+def test_pagerank_undirected_matches_symmetrized_directed(spark):
+    """undirected=True (the operator adds the reversed edges) must give
+    bit-for-bit the ranks of the directed call on the explicitly
+    symmetrized edge list, uniform and personalized. The forward list
+    carries a duplicate and one edge in both orientations already."""
+    from nifi_minifi_cpp_spark.analytics.graph import pagerank
+
+    fwd = [(i, (i * 7 + 3) % 23) for i in range(1, 23)] + [(1, 4), (4, 1), (1, 4)]
+    fwd = [(a, b) for a, b in fwd if a != b]
+    schema = "src long, dst long"
+    one_way = spark.createDataFrame(fwd, schema)
+    both_ways = spark.createDataFrame(fwd + [(b, a) for a, b in fwd], schema)
+    seeds = spark.createDataFrame([(1,), (5,), (99,)], "node long")
+    for teleport in (None, seeds):
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(one_way, iterations=3, teleport=teleport, undirected=True)
+            .collect()
+        }
+        want = {
+            r["node"]: r["rank"]
+            for r in pagerank(both_ways, iterations=3, teleport=teleport).collect()
+        }
+        assert got == want
 
 
-def test_triangle_count_degree_orientation(spark):
-    """orient='degree' (compact-forward, Schank & Wagner 2005) must
-    count the same triangles as the id orientation — including on a
-    hub-heavy graph where the orientations differ on most edges."""
-    from nifi_minifi_cpp_spark.analytics.graph import triangle_count
+def test_pagerank_directed_matches_power_iteration(spark):
+    """A directed graph with a source-only node (4) and a
+    destination-only node (5) against a pure-Python power iteration of
+    the documented update: every node (sources and sinks alike) takes
+    the restart mass, a sink's own mass leaves the walk, and a
+    source-only node receives nothing."""
+    from nifi_minifi_cpp_spark.analytics.graph import pagerank
 
-    # star hub 0 joined to a ring over 1..8: triangles are exactly the
-    # (0, i, i+1) fans = 8; hub degree 8 vs ring degree 3
-    edges = [(0, i) for i in range(1, 9)] + [(i, i % 8 + 1) for i in range(1, 9)]
+    edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (4, 2), (3, 5)]
+    nodes = sorted({n for e in edges for n in e})
+    out_deg = {n: sum(1 for s, _ in edges if s == n) for n in nodes}
     df = spark.createDataFrame(edges, "src long, dst long")
-    by_id = triangle_count(df, orient="id").collect()[0]
-    by_deg = triangle_count(df, orient="degree").collect()[0]
-    assert tuple(by_id) == tuple(by_deg)
-    assert by_id["n_triangles"] == 8
+    seeds = spark.createDataFrame([(4,), (2,)], "node long")
+    d = 0.85
+    for teleport, restart in (
+        (None, {n: 1 / len(nodes) for n in nodes}),
+        (seeds, {n: (0.5 if n in (2, 4) else 0.0) for n in nodes}),
+    ):
+        want = dict(restart)
+        for _ in range(4):
+            received = {n: 0.0 for n in nodes}
+            for s, t in edges:
+                received[t] += want[s] / out_deg[s]
+            want = {n: (1 - d) * restart[n] + d * received[n] for n in nodes}
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(df, iterations=4, damping=d, teleport=teleport).collect()
+        }
+        assert got.keys() == want.keys()
+        for n in nodes:
+            assert got[n] == pytest.approx(want[n], rel=1e-12, abs=1e-15)
 
-    # K4 under both orientations and both join strategies
-    k4 = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)], "src long, dst long"
-    )
-    for bc in (True, False):
-        row = triangle_count(k4, broadcast=bc, orient="degree").collect()[0]
-        assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 6, 4)
+
+def test_pagerank_rejects_symmetric_flag(spark):
+    """The caller-asserted symmetric=True contract is gone: the keyword
+    must fail loudly instead of silently taking a path."""
+    from nifi_minifi_cpp_spark.analytics.graph import pagerank
+
+    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    with pytest.raises(TypeError):
+        pagerank(edges, symmetric=True)
 
 
 def test_bfs_hops_known_graph(spark):

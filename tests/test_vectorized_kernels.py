@@ -173,8 +173,10 @@ def test_poisson_bootstrap_kernel_matches_catalyst_reference(spark):
     explode + md5 + conv + threshold-count pipeline EXACTLY, including
     the NULL edges: NULL event_id (every lane was NULL — the row left
     both sums), NULL value (counts in nw, contributes no swc term),
-    and a group whose every value is NULL (swc stays NULL -> NULL
-    replicates -> NULL CI bounds)."""
+    a group whose every value is NULL (swc stays NULL -> NULL
+    replicates -> NULL CI bounds), and a group whose every event_id is
+    NULL (no replicate at all, but the group keeps its point row with
+    NULL CI bounds)."""
     from pyspark.sql import functions as F
 
     from nifi_minifi_cpp_spark.analytics.sketches import (
@@ -188,6 +190,7 @@ def test_poisson_bootstrap_kernel_matches_catalyst_reference(spark):
         for i in range(200)
     ]
     rows += [("a", 1000, None), ("b", None, 3.5), ("allnull", 2000, None)]
+    rows += [("noid", None, 1.25), ("noid", None, -7.5)]
     df = spark.createDataFrame(rows, "event_type string, event_id long, value double")
 
     got = {r["event_type"]: r for r in poisson_bootstrap_mean_ci(df).collect()}

@@ -10,21 +10,27 @@ equi-join + one aggregation per round, so wall time should grow
 ~linearly in |E| with a flat per-round floor — that is the claim this
 probe pins with numbers.
 
-Usage: python tools/graph_probe.py [sf_dir]
+Usage: python tools/graph_probe.py [sf_dir] [out.json]
 Prints a markdown table to stdout (append the rows to
-BENCH_SF1_NOTES.md with attribution).
+BENCH_SF1_NOTES.md with attribution) and writes the same results,
+seconds per algorithm and replica count, as JSON to ``out.json``
+(default ``graph_probe.json``). Replicated inputs are staged as
+parquet under the temp directory (``TMPDIR``) and reused by later runs.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from nifi_minifi_cpp_spark.analytics import graph as _graph
 from nifi_minifi_cpp_spark.analytics.graph import (
     connected_components,
     hits,
@@ -36,6 +42,7 @@ from nifi_minifi_cpp_spark.entry_queries._shared import _supplier_part_edges
 from nifi_minifi_cpp_spark.session import get_spark, load_table
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+OUT_JSON = sys.argv[2] if len(sys.argv) > 2 else "graph_probe.json"
 # solo re-time of one leg: GRAPH_PROBE_REPLICAS=10 (comma-separated)
 REPLICAS = [
     int(x) for x in os.environ.get("GRAPH_PROBE_REPLICAS", "1,10,100").split(",")
@@ -48,12 +55,12 @@ def wanted(label: str) -> bool:
     return not ALGOS or label in ALGOS
 
 
-def scaled_edges(spark, base, stride: int, replicas: int):
+def scaled_edges(spark, base, stride: int, replicas: int, name: str = "edges"):
     """Union of ``replicas`` copies of the edge list, node ids shifted
     by ``rep * stride`` — disjoint components, identical per-replica
     structure. Staged to parquet so every timed run reads the same
     materialized input instead of re-running the explode."""
-    out = f"/tmp/graph_probe_edges_{replicas}x"
+    out = os.path.join(tempfile.gettempdir(), f"graph_probe_{name}_{replicas}x")
     if not os.path.exists(out):
         (
             base.withColumn("rep", F.explode(F.lit(list(range(replicas)))))
@@ -73,7 +80,7 @@ def scaled_lineitem_dir(spark, li, replicas: int) -> str:
     order and part key spaces both shifted per replica, so per-order
     basket structure (and the wedge-join fanout per order) is identical
     in every copy. Returns an sf_dir the registered entry reads as-is."""
-    out = f"/tmp/itemsim_probe_{replicas}x"
+    out = os.path.join(tempfile.gettempdir(), f"itemsim_probe_{replicas}x")
     if not os.path.exists(f"{out}/lineitem.parquet"):
         base = li.select("l_orderkey", "l_partkey")
         so = base.agg(F.max("l_orderkey")).first()[0] + 2
@@ -111,15 +118,15 @@ def main() -> None:
     spark = get_spark("graph-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
     # GRAPH_PROBE_MAX_NODES=0 forces the >BROADCAST_MAX_NODES shuffled
-    # fallback of every dial at any scale (VERDICT r16 #2: the fallback
-    # path was untested at every SF) — the module constant is the dial.
+    # fallback of every dial at any scale — the module constant is the
+    # dial.
     if os.environ.get("GRAPH_PROBE_MAX_NODES"):
-        from nifi_minifi_cpp_spark.analytics import graph as _graph
-
         _graph.BROADCAST_MAX_NODES = int(os.environ["GRAPH_PROBE_MAX_NODES"])
         print(f"BROADCAST_MAX_NODES overridden to {_graph.BROADCAST_MAX_NODES}")
     li = load_table(spark, "lineitem", SF_DIR)
     base = _supplier_part_edges(li).localCheckpoint(eager=True)
+    # one orientation per edge, for the undirected=True PageRank leg
+    fwd = _supplier_part_edges(li, symmetric=False).localCheckpoint(eager=True)
     n_edges = base.count()
     stride = (
         base.agg(F.greatest(F.max("src"), F.max("dst"))).first()[0] + 2
@@ -130,20 +137,20 @@ def main() -> None:
     for r in REPLICAS:
         e = scaled_edges(spark, base, stride, r)
         print(f"-- {r}x ({n_edges * r} edges)")
-        # symmetric=True matches the entry call sites (r17 fast path);
-        # the edge list here is symmetric by construction
         if wanted("pagerank_3it"):
+            # the entry call sites' form: one orientation per edge,
+            # symmetrized by the operator
+            e_fwd = scaled_edges(spark, fwd, stride, r, "fwd_edges")
             results.setdefault("pagerank_3it", {})[r] = timed(
                 "pagerank_3it",
-                lambda: pagerank(e, iterations=3, damping=0.85, symmetric=True),
+                lambda: pagerank(e_fwd, iterations=3, damping=0.85, undirected=True),
             )
         if wanted("pagerank_3it_general"):
-            # same-session A/B leg: the general (symmetric=False) path
-            # the entries used before r17 — the honest at-scale
-            # comparison, immune to the rig's cross-day band
+            # same-session A/B leg: the directed path (node-table
+            # zero-fill every round) on the same symmetric edges
             results.setdefault("pagerank_3it_general", {})[r] = timed(
                 "pagerank_3it_general",
-                lambda: pagerank(e, iterations=3, damping=0.85, symmetric=False),
+                lambda: pagerank(e, iterations=3, damping=0.85),
             )
         if wanted("connected_components"):
             results.setdefault("connected_components", {})[r] = timed(
@@ -172,6 +179,18 @@ def main() -> None:
     for name, row in results.items():
         cells = " | ".join(f"{row[r]:.2f}" for r in REPLICAS)
         print(f"| {name} | {cells} |")
+    with open(OUT_JSON, "w") as f:
+        json.dump(
+            {
+                "sf_dir": SF_DIR,
+                "base_edges": n_edges,
+                "broadcast_max_nodes": _graph.BROADCAST_MAX_NODES,
+                "seconds": results,
+            },
+            f,
+            indent=2,
+        )
+    print(f"results written to {OUT_JSON}")
     spark.stop()
 
 
